@@ -14,9 +14,9 @@ Re-expresses the query and data-processing capabilities of GDAL/OGR
 - ``operators.spatial_join`` — staged bbox-prefilter + exact-PIP join with
   broadcast and shuffle (cell-partitioned) paths
   (reference semantics: gdal/ogr/ogrsf_frmts/generic/ogrlayer.cpp:1344-1450, 2016-2146).
-- ``operators.knn``      — grid-partitioned kNN via cell-ring expansion.
-- ``operators.tiling``   — tile assignment + pyramid rollup
-  (reference: gdal2tiles.py base/overview tile passes).
+- ``operators.knn``      — exact kNN: histogram-bounded radius, then one join.
+- ``operators.tiling``   — tile assignment + pyramid rollup, every level in
+  one aggregation (reference: gdal2tiles.py base/overview tile passes).
 - ``operators.dedup``    — exact/MinHash-LSH/SimHash/n-gram-Jaccard dedup.
 - ``operators.ann``      — cosine top-k similarity search.
 - ``plans.manifest``     — checkpoint manifest + per-partition lineage

@@ -134,17 +134,6 @@ def mercator_y(lat: Column) -> Column:
     return my * F.lit(ORIGIN_SHIFT / 180.0)
 
 
-def meters_to_lon(mx: Column) -> Column:
-    return mx / F.lit(ORIGIN_SHIFT) * F.lit(180.0)
-
-
-def meters_to_lat(my: Column) -> Column:
-    lat = my / F.lit(ORIGIN_SHIFT) * F.lit(180.0)
-    return F.lit(180.0 / math.pi) * (
-        F.lit(2.0) * F.atan(F.exp(lat * F.lit(math.pi / 180.0))) - F.lit(math.pi / 2.0)
-    )
-
-
 def meters_to_pixels_x(mx: Column, zoom: int) -> Column:
     return (mx + F.lit(ORIGIN_SHIFT)) / F.lit(py_resolution(zoom))
 
@@ -166,6 +155,21 @@ def tile_x(lon: Column, zoom: int) -> Column:
 def tile_y(lat: Column, zoom: int) -> Column:
     """lat → TMS tile y at zoom."""
     return pixels_to_tile(meters_to_pixels_y(mercator_y(lat), zoom))
+
+
+def cell_key(lon: Column, lat: Column, zoom: int) -> tuple[Column, Column]:
+    """(tx, ty) of the tile holding (lon, lat), clamped to the Mercator
+    domain: lat to ±MAX_LAT and both indices to [0, 2^zoom - 1]. A
+    coordinate on or past the domain edge (lon = ±180, |lat| > MAX_LAT)
+    lands in an edge tile instead of off the grid or on a null key; null
+    coordinates stay null."""
+    def clamp(c: Column, lo: float, hi: float) -> Column:
+        return F.least(F.greatest(c, F.lit(lo)), F.lit(hi))
+
+    top = (1 << zoom) - 1
+    # least/greatest skip nulls, so a null coordinate is tested up front
+    return (F.when(lon.isNotNull(), clamp(tile_x(lon, zoom), 0, top)),
+            F.when(lat.isNotNull(), clamp(tile_y(clamp(lat, -MAX_LAT, MAX_LAT), zoom), 0, top)))
 
 
 def google_y(ty: Column, zoom: int) -> Column:
@@ -243,23 +247,6 @@ def with_geodetic_tile_columns(df, lon: str = "lon", lat: str = "lat",
                           geodetic_tile_x(F.col(lon), zoom, tmscompatible))
             .withColumn(prefix + "gty",
                         geodetic_tile_y(F.col(lat), zoom, tmscompatible)))
-
-
-def parent_tile(t: Column) -> Column:
-    """Tile coord at zoom-1 = floor division by 2 (pyramid rollup key;
-    gdal2tiles.py:1313-1400 overview pass shape). Works for negative
-    coords too via arithmetic shift semantics of floor()."""
-    return F.floor(t / F.lit(2.0)).cast("int")
-
-
-def tile_bounds_cols(tx: Column, ty: Column, zoom: int) -> list[Column]:
-    """[minx, miny, maxx, maxy] mercator-meter bounds columns."""
-    res = py_resolution(zoom)
-    minx = tx.cast("double") * F.lit(float(TILE_SIZE)) * F.lit(res) - F.lit(ORIGIN_SHIFT)
-    miny = ty.cast("double") * F.lit(float(TILE_SIZE)) * F.lit(res) - F.lit(ORIGIN_SHIFT)
-    maxx = (tx.cast("double") + 1) * F.lit(float(TILE_SIZE)) * F.lit(res) - F.lit(ORIGIN_SHIFT)
-    maxy = (ty.cast("double") + 1) * F.lit(float(TILE_SIZE)) * F.lit(res) - F.lit(ORIGIN_SHIFT)
-    return [minx, miny, maxx, maxy]
 
 
 def with_tile_columns(df, lon: str = "lon", lat: str = "lat", zoom: int = 12,

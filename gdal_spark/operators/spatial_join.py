@@ -96,10 +96,6 @@ def point_in_polygon_join(
             # [xmin,xmax)×[ymin,ymax), pure JVM columns, fully scalable
             return _rect_pip_jvm(points, rects, poly_id, lon, lat, how)
         return _broadcast_pip(points, poly_rows, poly_id, lon, lat, how)
-    if strategy == "arrow":
-        rows = polygons.select(poly_id, poly_wkb).collect()
-        return _broadcast_pip(points, [(r[0], bytes(r[1])) for r in rows],
-                              poly_id, lon, lat, how)
     if strategy == "shuffle":
         return _shuffle_pip(points, polygons, poly_id, poly_wkb, lon, lat, how, cell_zoom)
     raise ValueError(f"unsupported strategy={strategy!r}")
@@ -266,14 +262,14 @@ def polygon_cover_cells(polygons: DataFrame, poly_wkb: str, cell_zoom: int,
                         xmin="xmin", ymin="ymin", xmax="xmax", ymax="ymax") -> DataFrame:
     """Explode each polygon over all (tx, ty) cells its bbox covers —
     pure column sequence/explode (the gdaltindex-style manifest,
-    gdal/apps/gdaltindex.c:311)."""
+    gdal/apps/gdaltindex.c:311). Cells are clamped to the Mercator domain
+    (``tiles.cell_key``), so a bbox past the poles or ±180 still covers the
+    edge cells that hold its valid part."""
     cols = polygons.columns
     if not all(c in cols for c in (xmin, ymin, xmax, ymax)):
         polygons = with_envelope(polygons, poly_wkb)
-    tx_lo = tiles.tile_x(F.col(xmin), cell_zoom)
-    tx_hi = tiles.tile_x(F.col(xmax), cell_zoom)
-    ty_lo = tiles.tile_y(F.col(ymin), cell_zoom)
-    ty_hi = tiles.tile_y(F.col(ymax), cell_zoom)
+    tx_lo, ty_lo = tiles.cell_key(F.col(xmin), F.col(ymin), cell_zoom)
+    tx_hi, ty_hi = tiles.cell_key(F.col(xmax), F.col(ymax), cell_zoom)
     return (
         polygons.withColumn("_tx", F.explode(F.sequence(tx_lo, tx_hi)))
         .withColumn("_ty", F.explode(F.sequence(ty_lo, ty_hi)))
@@ -321,10 +317,8 @@ def _shuffle_pip(points, polygons, poly_id, poly_wkb, lon, lat, how, cell_zoom) 
         # single lineage (no independent anti-join re-scan that could
         # recompute different ids; round-2 ADVICE).
         points = points.withColumn("_rid", F.monotonically_increasing_id())
-    pts = (
-        points.withColumn("_tx", tiles.tile_x(F.col(lon), cell_zoom))
-        .withColumn("_ty", tiles.tile_y(F.col(lat), cell_zoom))
-    )
+    tx, ty = tiles.cell_key(F.col(lon), F.col(lat), cell_zoom)
+    pts = points.withColumn("_tx", tx).withColumn("_ty", ty)
     polys = polygon_cover_cells(
         polygons.select(poly_id, poly_wkb), poly_wkb, cell_zoom
     ).select(F.col(poly_id).alias("_pid"), F.col(poly_wkb).alias("_wkb"), "_tx", "_ty")

@@ -2,11 +2,11 @@
 
 Base pass: every point gets its (z, tx, ty) via closed-form column math
 (gdal2tiles.py:211-318); per-tile aggregation is one shuffle on the tile
-key. Overview pass: zoom z-1 tiles aggregate their 4 children via
-``groupBy(tx//2, ty//2)`` iterated down to min_zoom — the distributed
-analog of gdal2tiles.py:1313-1400 (4-child overview resampling), here over
-per-tile statistics rather than pixels (pixel pyramids live in
-operators/resample.py).
+key. Overview pass: the distributed analog of gdal2tiles.py:1313-1400
+(4-child overview resampling), here over per-tile statistics rather than
+pixels (pixel pyramids live in raster/pyramid.py): each base tile is
+emitted once per level as its ancestor, and a single groupBy on
+(zoom, tx, ty) sums every level at once.
 """
 
 from __future__ import annotations
@@ -35,26 +35,21 @@ def tile_counts(points: DataFrame, zoom: int, lon: str = "lon", lat: str = "lat"
 
 
 def pyramid(base: DataFrame, zoom: int, min_zoom: int = 0) -> DataFrame:
-    """Roll per-tile counts up from ``zoom`` to ``min_zoom``; returns the
-    union over all levels. Each level is one narrow-key shuffle of the
-    previous (already-reduced) level — the overview-pass dataflow."""
-    has_w = "wsum" in base.columns
-    levels = [base]
-    cur = base
-    for z in range(zoom - 1, min_zoom - 1, -1):
-        aggs = [F.sum("n").alias("n")] + ([F.sum("wsum").alias("wsum")] if has_w else [])
-        cur = (
-            cur.groupBy(
-                tiles.parent_tile(F.col("tx")).alias("tx"),
-                tiles.parent_tile(F.col("ty")).alias("ty"),
-            )
-            .agg(*aggs)
-            .withColumn("zoom", F.lit(z))
-            .withColumn("quadkey", tiles.quadkey(F.col("tx"), F.col("ty"), z))
-            .select("zoom", "tx", "ty", "quadkey", *(["n", "wsum"] if has_w else ["n"]))
-        )
-        levels.append(cur)
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out
+    """Roll per-tile ``n`` (and ``wsum``, when present) up from ``zoom`` to
+    ``min_zoom``. Output: (zoom, tx, ty, quadkey, n [, wsum]), every level.
+
+    Each base tile is emitted once per level as its ancestor
+    (zoom - d, tx >> d, ty >> d), and one groupBy sums all levels: a single
+    exchange, however many levels are asked for."""
+    vals = ["n"] + (["wsum"] if "wsum" in base.columns else [])
+    ancestors = F.explode(F.array(*[
+        F.struct(F.lit(zoom - d).alias("zoom"), F.shiftright("tx", d).alias("tx"),
+                 F.shiftright("ty", d).alias("ty"))
+        for d in range(zoom - min_zoom + 1)]))
+    # an ancestor's quadkey is a prefix of any descendant's: take the
+    # descendant (tx << d, ty << d) at ``zoom`` and cut it to the level
+    desc = [F.expr(f"shiftleft({c}, {zoom} - zoom)") for c in ("tx", "ty")]
+    return (base.select(ancestors.alias("_a"), *vals).select("_a.*", *vals)
+            .groupBy("zoom", "tx", "ty").agg(*[F.sum(v).alias(v) for v in vals])
+            .withColumn("quadkey", tiles.quadkey(*desc, zoom).substr(F.lit(1), F.col("zoom")))
+            .select("zoom", "tx", "ty", "quadkey", *vals))

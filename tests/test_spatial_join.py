@@ -130,3 +130,26 @@ def test_metadata_probe_runs_no_job(spark, tmp_path):
     after = set(tracker.getJobIdsForGroup(None) or [])
     assert est is not None and est >= 1
     assert after == before, "metadata probe launched a Spark job"
+
+
+@pytest.mark.parametrize("how", ["inner", "left", "left_first"])
+def test_shuffle_matches_broadcast_across_the_pole(spark, how):
+    """A concave diamond whose bbox passes +90° latitude: the shuffle path
+    must match points in its valid part exactly as the broadcast path does
+    (its cell cover once ended on a null tile row and dropped them)."""
+    from collections import Counter
+    polys = PG.diamond_grid(spark, 1, 1, 80.0, 120.0, 60.0, 100.0,
+                            concave=True).select("cell_id", "wkb")
+    pts = spark.createDataFrame(
+        [(f"p{i}_{j}", -12.0 + 3.0 * i, 70.0 + 1.5 * j)
+         for i in range(15) for j in range(14)],
+        "url string, lon double, lat double")
+
+    def run(strategy):
+        out = SJ.point_in_polygon_join(pts, polys, how=how, strategy=strategy,
+                                       cell_zoom=4)
+        return Counter((r["url"], r["cell_id"]) for r in out.collect())
+
+    shuffle = run("shuffle")
+    assert shuffle == run("broadcast")
+    assert sum(n for (_u, cid), n in shuffle.items() if cid is not None) > 20

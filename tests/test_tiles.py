@@ -7,8 +7,6 @@ include hand-checked canonical values and the FIXTURES.md §6 edge cases
 
 from __future__ import annotations
 
-import math
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -91,11 +89,17 @@ def test_spark_matches_python(spark, zoom):
         assert row["quadkey"] == T.py_quadkey(etx, ety, zoom)
 
 
-def test_spark_parent_tile(spark):
-    df = spark.createDataFrame([(i,) for i in range(-4, 9)], "t int")
-    rows = df.select(T.parent_tile(F.col("t")).alias("p"), "t").collect()
-    for r in rows:
-        assert r["p"] == math.floor(r["t"] / 2.0)
+def test_cell_key_clamps_to_domain(spark):
+    """Inside the domain cell_key is the plain tile; on or past its edge
+    (lon = ±180, |lat| > MAX_LAT) it is the edge tile; null stays null."""
+    z, top = 4, 15
+    pts = [(10.0, 20.0), (-180.0, 0.0), (180.0, 0.0), (0.0, 88.0), (0.0, -90.0),
+           (-200.0, 95.0), (None, 10.0), (10.0, None)]
+    df = spark.createDataFrame(pts, "lon double, lat double")
+    tx, ty = T.cell_key(F.col("lon"), F.col("lat"), z)
+    got = [tuple(r) for r in df.select(tx, ty).collect()]
+    assert got == [T.py_latlon_to_tile(20.0, 10.0, z), (0, 7), (top, 7), (7, top),
+                   (7, 0), (0, top), (None, 8), (8, None)]
 
 
 def test_geodetic_profile_twins():
